@@ -2,8 +2,7 @@
 from the generator's truth columns, from plain Python over the input
 tables, and from DuckDB running each query's oracle SQL. From the
 program only the structure fold (``kernels.fold.fold_document``, fed the
-TRUTH labels rather than the pipeline's) and the PNG decoder (to find the
-generator's ruler bar) are used.
+TRUTH labels rather than the pipeline's) is used.
 
 Every check reports the operations it condemns: pages for the extraction
 checks (a document-level fault fails all of the document's pages, a
@@ -23,31 +22,14 @@ import pyarrow.parquet as pq
 ROOT_PARENT = -1
 
 
-def _ruler_rows(png: bytes, frame_bottom: int) -> tuple[int, int] | None:
-    """First and last row of the generator's ruler bar under the page
-    frame (rows below the frame whose ink spans a tenth of the width), or
-    None when the page has no ruler. Outside the frame only the ruler is
-    wider than a noise speck."""
-    import numpy as np
-
-    from ocrd_anybaseocr_spark.png import decode_gray
-
-    img, _ = decode_gray(png)
-    rows = np.nonzero((img[frame_bottom + 1 :] < 128).sum(axis=1) >= 0.1 * img.shape[1])[0]
-    return (frame_bottom + 1 + int(rows[0]), frame_bottom + 1 + int(rows[-1])) if len(rows) else None
-
-
 def load_truth(corpus_dir: str) -> dict:
     """Input pages and documents, keyed the way the checks need them."""
     blobs = pq.read_table(
         os.path.join(corpus_dir, "page_blobs.parquet"),
-        columns=["media_ref", "image", "truth_border", "truth_labels", "truth_skew"],
+        columns=["media_ref", "truth_border", "truth_labels", "truth_skew"],
     ).to_pylist()
     docs = pq.read_table(os.path.join(corpus_dir, "documents.parquet")).to_pylist()
-    pages = {}
-    for b in blobs:
-        b["ruler_rows"] = _ruler_rows(b.pop("image"), b["truth_border"][3])
-        pages[b["media_ref"]] = b
+    pages = {b["media_ref"]: b for b in blobs}
     doc_pages, doc_spans = {}, {}
     for d in docs:
         ordered = sorted(d["spans"], key=lambda s: s["offset"])
@@ -59,21 +41,6 @@ def load_truth(corpus_dir: str) -> dict:
     return {"pages": pages, "doc_pages": doc_pages, "doc_spans": doc_spans}
 
 
-def ruler_as_frame(truth_page: dict, border) -> bool:
-    """The one known way the kernels miss exact recovery: the frame's
-    bottom edge is placed on the ruler bar drawn just below it (seen on
-    about 1 page in 700 of the bench profile, every DPI; see CHANGES.md).
-    It depends on the seed, so it is counted apart, not as a failure."""
-    rows = truth_page["ruler_rows"]
-    t = list(truth_page["truth_border"])
-    return (
-        rows is not None
-        and border is not None
-        and list(border[:3]) == t[:3]
-        and rows[0] <= border[3] <= rows[1]
-    )
-
-
 def _read(out_dir: str, name: str) -> list[dict]:
     path = os.path.join(out_dir, name)
     if not os.path.isdir(path):
@@ -81,11 +48,11 @@ def _read(out_dir: str, name: str) -> list[dict]:
     return pq.read_table(path).to_pylist()
 
 
-def check_pages(truth: dict, page_rows: list[dict]) -> tuple[set[str], set[str]]:
+def check_pages(truth: dict, page_rows: list[dict]) -> set[str]:
     """Clean-tier exact recovery: one row per input page, error null,
     border/labels/skew equal to the generator's truth. Returns the failing
-    pages and, apart, the pages that show only the known ruler fault."""
-    bad, ruler = set(), set()
+    pages."""
+    bad = set()
     seen = Counter(r["media_ref"] for r in page_rows)
     for m in truth["pages"]:
         if seen[m] != 1:
@@ -98,11 +65,10 @@ def check_pages(truth: dict, page_rows: list[dict]) -> tuple[set[str], set[str]]
             r["error"] is not None
             or list(r["labels"] or []) != list(t["truth_labels"])
             or r["skew"] != t["truth_skew"]
+            or list(r["border"] or []) != list(t["truth_border"])
         ):
             bad.add(r["media_ref"])
-        elif list(r["border"] or []) != list(t["truth_border"]):
-            (ruler if ruler_as_frame(t, r["border"]) else bad).add(r["media_ref"])
-    return bad, ruler
+    return bad
 
 
 def check_spans(truth: dict, span_rows: list[dict]) -> set[str]:
@@ -179,12 +145,12 @@ def check_no_duplicates(page_rows: list[dict]) -> set[str]:
 
 
 def check_extraction(truth: dict, out_dir: str, n_buckets: int) -> dict:
-    """All extraction checks over one pass's output. ``failed`` is the set
-    of input pages condemned by any check; ``by_check`` names them."""
+    """All extraction checks over one pass's output. ``failed_pages`` is
+    the set of input pages condemned by any check, ``failed`` its size and
+    ``by_check`` the count each check condemns."""
     page_rows = _read(out_dir, "page_results")
-    bad_pages, ruler = check_pages(truth, page_rows)
     by_check: dict[str, set[str]] = {
-        "pages": bad_pages,
+        "pages": check_pages(truth, page_rows),
         "duplicates": check_no_duplicates(page_rows),
     }
     doc_pages = truth["doc_pages"]
@@ -197,10 +163,10 @@ def check_extraction(truth: dict, out_dir: str, n_buckets: int) -> dict:
     bucket_of = {r["media_ref"]: r["part_bucket"] for r in page_rows}
     by_check["checkpoints"] = {m for m in truth["pages"] if bucket_of.get(m) in buckets}
     failed = set().union(*by_check.values()) & set(truth["pages"])
-    by_check["known_ruler_fault"] = ruler
     return {
         "attempted": len(truth["pages"]),
         "failed": len(failed),
+        "failed_pages": failed,
         "by_check": {k: len(v) for k, v in by_check.items()},
     }
 
